@@ -46,16 +46,26 @@ def _term_json(row_val) -> dict | None:
     return out
 
 
+def result_rows(result):
+    """The binding rows of a SelectResult: the layout probe's
+    in-memory rows when it answered the query, else the DataFrame
+    streamed through ``toLocalIterator`` (the whole result set is never
+    held in memory).  Either way ``row[var]`` is the term (struct
+    fields by name) or None."""
+    if result.rows is not None:
+        return iter(result.rows)
+    return result.df.toLocalIterator()
+
+
 def iter_results_json(result):
     """SelectResult → W3C SPARQL 1.1 Query Results JSON, streamed as
-    string chunks (one binding row per chunk via ``toLocalIterator`` —
-    the driver never holds the whole result set)."""
+    string chunks (one binding row per chunk)."""
     yield (
         '{"head": {"vars": ' + json.dumps(list(result.vars))
         + '}, "results": {"bindings": ['
     )
     first = True
-    for row in result.df.toLocalIterator():
+    for row in result_rows(result):
         b = {}
         for v in result.vars:
             tj = _term_json(row[v])
@@ -82,7 +92,7 @@ def iter_results_xml(result):
         + "".join(f'<variable name="{v}"/>' for v in result.vars)
         + "</head><results>"
     )
-    for row in result.df.toLocalIterator():
+    for row in result_rows(result):
         parts = ["<result>"]
         for v in result.vars:
             t = row[v]
@@ -123,6 +133,8 @@ def _csv_cell(t, sep: str) -> str:
 
 
 def _n3_py(t) -> str:
+    """Python twin of :func:`n3_col` (same escapes, same checks),
+    so a line built here is byte-identical to ``ntriples_lines``."""
     kind, lex = t["kind"], t["lex"]
     if kind == T.KIND_IRI:
         return f"<{lex}>"
@@ -135,16 +147,16 @@ def _n3_py(t) -> str:
         .replace("\n", "\\n")
         .replace("\r", "\\r")
     )
-    if t["lang"]:
+    if t["lang"] is not None:
         return f'"{esc}"@{t["lang"]}'
-    if t["dt"] and t["dt"] != T.XSD_STRING:
+    if t["dt"] is not None and t["dt"] != T.XSD_STRING:
         return f'"{esc}"^^<{t["dt"]}>'
     return f'"{esc}"'
 
 
 def iter_results_csv(result, sep: str = ","):
     yield sep.join(result.vars) + "\n"
-    for row in result.df.toLocalIterator():
+    for row in result_rows(result):
         yield sep.join(_csv_cell(row[v], sep) for v in result.vars) + "\n"
 
 
@@ -154,7 +166,7 @@ def results_csv(result, sep: str = ",") -> str:
 
 def iter_results_tsv(result):
     yield "\t".join("?" + v for v in result.vars) + "\n"
-    for row in result.df.toLocalIterator():
+    for row in result_rows(result):
         yield (
             "\t".join(
                 "" if row[v] is None else _n3_py(row[v]) for v in result.vars
@@ -180,7 +192,7 @@ def iter_results_html(result):
         + "".join(f"<th>{xml_escape(v)}</th>" for v in result.vars)
         + "</tr>"
     )
-    for row in result.df.toLocalIterator():
+    for row in result_rows(result):
         cells = []
         for v in result.vars:
             t = row[v]
@@ -474,9 +486,15 @@ def turtle_string(triples: DataFrame, prefixes: dict | None = None) -> str:
     return "".join(iter_turtle(triples, prefixes))
 
 
-def iter_ntriples(triples: DataFrame):
+def iter_ntriples(triples):
     """Stream an N-Triples document line by line (bounded driver
-    memory); use :func:`write_ntriples` for distributed dumps."""
+    memory); use :func:`write_ntriples` for distributed dumps.
+    ``triples`` is an (st, pt, ot) DataFrame, or the layout probe's
+    list of (st, pt, ot) term dicts."""
+    if not isinstance(triples, DataFrame):
+        for st, pt, ot in triples:
+            yield f"{_n3_py(st)} {_n3_py(pt)} {_n3_py(ot)} .\n"
+        return
     for r in ntriples_lines(triples).toLocalIterator():
         yield r["value"] + "\n"
 

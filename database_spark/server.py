@@ -69,6 +69,16 @@ def _negotiate(accept: str) -> str:
     return "json"
 
 
+#: bytes of chunked reply coalesced per socket write
+_STREAM_WRITE = 64 * 1024
+
+
+def _page(rows: list, limit: int | None, offset: int | None) -> list:
+    """The protocol-level ?offset=/?limit= slice of in-memory rows."""
+    rows = rows[offset or 0:]
+    return rows if limit is None else rows[:limit]
+
+
 def _primed(chunks, n: int = 2):
     """Materialize the first ``n`` chunks of a lazy writer eagerly (the
     first is usually a static header; the second pulls the first row
@@ -135,6 +145,11 @@ class SparqlEndpoint:
             # bodies — a big SELECT/CONSTRUCT never materializes as one
             # driver-side string
             protocol_version = "HTTP/1.1"
+            # TCP_NODELAY: a reply is a header write then body writes;
+            # with Nagle on, the body waits for the client's delayed ACK
+            # of the headers (~40 ms on Linux) — longer than a whole
+            # point read.  ``_reply`` coalesces chunks, so no tiny packets
+            disable_nagle_algorithm = True
 
             def log_message(self, *a):  # quiet
                 pass
@@ -149,8 +164,9 @@ class SparqlEndpoint:
             def _reply(self, code: int, body, ctype: str):
                 """Send a response.  ``body`` is a ``str`` (sized reply,
                 Content-Length framing) or an ITERATOR of string chunks
-                (chunked transfer — each chunk hits the wire as it
-                leaves ``toLocalIterator``, bounded server memory).
+                (chunked transfer — chunks hit the wire as they leave
+                the writer, at most ``_STREAM_WRITE`` bytes held: bounded
+                server memory).
                 ``_headers_sent`` lets error paths know when it is too
                 late to send a status line (mid-stream failures abort
                 the connection, the only correct chunked behavior)."""
@@ -175,13 +191,17 @@ class SparqlEndpoint:
                 self.send_header("Transfer-Encoding", "chunked")
                 self._headers_sent = True
                 self.end_headers()
+                # chunks (often one result row each) go out in writes of
+                # up to _STREAM_WRITE bytes: bounded memory, few packets
+                buf = bytearray()
                 for chunk in body:
                     data = chunk.encode()
                     if data:
-                        self.wfile.write(
-                            f"{len(data):x}\r\n".encode() + data + b"\r\n"
-                        )
-                self.wfile.write(b"0\r\n\r\n")
+                        buf += f"{len(data):x}\r\n".encode() + data + b"\r\n"
+                        if len(buf) >= _STREAM_WRITE:
+                            self.wfile.write(buf)
+                            buf.clear()
+                self.wfile.write(buf + b"0\r\n\r\n")
 
             def _route_engine(self):
                 """/sparql → default ns; /namespace/<ns>/sparql → <ns>;
@@ -1646,6 +1666,20 @@ class SparqlEndpoint:
 
         engine = engine or self.engine
         q = parse_query(query)
+        plan = engine.point_read_plan(q)
+        probe = ""
+        if plan is not None:
+            dirs = "\n".join(
+                f"  {plan.store.probe_bucket(s, o)}" for s, _p, o in plan.patterns
+            )
+            probe = (
+                "=== Layout probe ===\n"
+                "Served without Spark: pyarrow reads the bucket directories\n"
+                f"{dirs}\nfiltered on the constant term ids and g IS NULL"
+                + (" (N-Triples replies only)" if plan.form == "describe" else "")
+                + ".  The plan below is the Spark path, used when the probe"
+                " does not serve a request.\n\n"
+            )
         if isinstance(q, A.AskQuery):
             c = engine._compiler(dataset=q.dataset, hints=getattr(q, "hints", None))
             with engine._hint_scope(q):
@@ -1664,6 +1698,7 @@ class SparqlEndpoint:
             f"{query.strip()}\n\n"
             "=== Parsed algebra ===\n"
             f"{q!r}\n\n"
+            f"{probe}"
             "=== Physical plan (Catalyst, formatted) ===\n"
             f"{buf.getvalue()}"
         )
@@ -1700,7 +1735,9 @@ class SparqlEndpoint:
         q = parse_query(query)
         fmt = _negotiate(accept)
         if isinstance(q, A.AskQuery):
-            got = engine.ask(query)
+            got = engine.point_read(q)
+            if got is None:
+                got = engine.ask(query)
             if fmt == "xml":
                 return (
                     '<?xml version="1.0"?><sparql xmlns="http://www.w3.org/'
@@ -1719,6 +1756,24 @@ class SparqlEndpoint:
                 CONTENT_TYPES["json"],
             )
         if isinstance(q, (A.ConstructQuery, A.DescribeQuery)):
+            # graph content negotiation (ConnegUtil): Turtle, RDF/XML
+            # and JSON-LD writers; N-Triples default — all streamed
+            kinds = [
+                part.split(";")[0].strip().lower()
+                for part in (accept or "").split(",")
+            ]
+            if any(k in ("text/turtle", "application/x-turtle") for k in kinds):
+                writer, ctype = W.iter_turtle, "text/turtle"
+            elif "application/rdf+xml" in kinds:
+                writer, ctype = W.iter_rdfxml, "application/rdf+xml"
+            elif "application/ld+json" in kinds:
+                writer, ctype = W.iter_jsonld, "application/ld+json"
+            else:
+                writer, ctype = W.iter_ntriples, "application/n-triples"
+            if writer is W.iter_ntriples and isinstance(q, A.DescribeQuery):
+                triples = engine.point_read(q)
+                if triples is not None:
+                    return _primed(writer(_page(triples, limit, offset))), ctype
             df = (
                 engine.construct(query)
                 if isinstance(q, A.ConstructQuery)
@@ -1728,24 +1783,15 @@ class SparqlEndpoint:
                 df = df.offset(offset)
             if limit is not None:
                 df = df.limit(limit)
-            # graph content negotiation (ConnegUtil): Turtle, RDF/XML
-            # and JSON-LD writers; N-Triples default — all streamed
-            kinds = [
-                part.split(";")[0].strip().lower()
-                for part in (accept or "").split(",")
-            ]
-            if any(k in ("text/turtle", "application/x-turtle") for k in kinds):
-                return _primed(W.iter_turtle(df)), "text/turtle"
-            if "application/rdf+xml" in kinds:
-                return _primed(W.iter_rdfxml(df)), "application/rdf+xml"
-            if "application/ld+json" in kinds:
-                return _primed(W.iter_jsonld(df)), "application/ld+json"
-            return _primed(W.iter_ntriples(df)), "application/n-triples"
-        res = engine.select(query)
-        if offset:
-            res.df = res.df.offset(offset)
-        if limit is not None:
-            res.df = res.df.limit(limit)
+            return _primed(writer(df)), ctype
+        res = engine.point_read(q) or engine.select(query)
+        if res.rows is not None:
+            res.rows = _page(res.rows, limit, offset)
+        else:
+            if offset:
+                res.df = res.df.offset(offset)
+            if limit is not None:
+                res.df = res.df.limit(limit)
         writer = {
             "json": W.iter_results_json,
             "xml": W.iter_results_xml,

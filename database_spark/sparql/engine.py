@@ -11,10 +11,11 @@ Catalyst.  Query forms SELECT/ASK/CONSTRUCT/DESCRIBE
 from __future__ import annotations
 
 import contextlib
+import re
 import threading
 import time
 from collections import OrderedDict
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -50,8 +51,55 @@ class TxConflict(Exception):
 
 @dataclass
 class SelectResult:
-    df: DataFrame  # term-struct column per projected variable
+    df: DataFrame | None  # term-struct column per projected variable
     vars: list
+    #: the bindings as Python dicts (var -> term dict) when the
+    #: layout probe answered the query; ``df`` is None then
+    rows: list | None = None
+
+
+@dataclass
+class PointRead:
+    """How the layout probe answers a query (``SparqlEngine.point_read_plan``):
+    the store it reads, the constant-keyed patterns to probe — (s, p, o)
+    with a Term per bound position, None per variable — and the reply's
+    shape."""
+
+    store: TripleStore
+    form: str  # "select" | "ask" | "describe"
+    patterns: list
+    #: SELECT: head.vars, and which probed column binds each variable
+    vars: list = field(default_factory=list)
+    binds: dict = field(default_factory=dict)
+    limit: int | None = None
+
+
+_DECIMAL_LEX = re.compile(r"[+-]?(\d+(\.\d*)?|\.\d+)([eE][+-]?\d+)?")
+
+
+def _order_key(t: dict | None) -> tuple | None:
+    """``terms.sort_key`` of one term dict, computed in Python (unbound
+    first), or None when the key needs a cast Python cannot reproduce
+    exactly (a non-decimal numeric lexical, any date/time)."""
+    if t is None:
+        return (0,)
+    if t["kind"] != T.KIND_LITERAL:
+        return (1 if t["kind"] == T.KIND_BNODE else 2, (0,), (0,), (0,), _opt(t["lang"]), t["lex"])
+    dt = t["dt"]
+    if dt is None or dt in (T.XSD_STRING, T.RDF_LANGSTRING):
+        return (3, (0,), (0,), (0,), _opt(t["lang"]), t["lex"])
+    if dt in (T.XSD_DATETIME, T.XSD_DATE):
+        return None
+    if dt in T.NUMERIC_DATATYPES:
+        if not _DECIMAL_LEX.fullmatch(t["lex"]):
+            return None
+        return (4, (1, float(t["lex"])), (0,), (1, dt), _opt(t["lang"]), t["lex"])
+    return (6, (0,), (0,), (1, dt), _opt(t["lang"]), t["lex"])
+
+
+def _opt(v) -> tuple:
+    """Nulls-first ordering of an optional key part."""
+    return (0,) if v is None else (1, v)
 
 
 def term_value(col: Column, target: str = "lex") -> Column:
@@ -619,27 +667,40 @@ class SparqlEngine:
                 ids = parts[0]
                 for p in parts[1:]:
                     ids = ids.unionAll(p)
-        if const_targets:
-            spark = self.store.spark
-            cdf = spark.range(1).select(
-                F.explode(
-                    F.array(*[T.term_id(T.lit_term(t)) for t in const_targets])
-                ).alias("id")
-            )
-            ids = cdf if ids is None else ids.unionAll(cdf)
-        if ids is None:
-            return self.store.df.select("st", "pt", "ot").limit(0)
-        ids = ids.where(F.col("id").isNotNull()).dropDuplicates()
         trips = self.store.df
-        if mode == "cbd":
-            return self._cbd(trips, ids)
-        if mode == "scbd":
-            return self._cbd(trips, ids, reverse=True)
-        fwd = trips.join(ids.withColumnRenamed("id", "s"), "s", "left_semi")
-        if mode == "forward":
-            return fwd.dropDuplicates(["s", "p", "o", "g"]).select("st", "pt", "ot")
-        bwd = trips.join(ids.withColumnRenamed("id", "o"), "o", "left_semi")
-        return fwd.unionByName(bwd).dropDuplicates(["s", "p", "o", "g"]).select("st", "pt", "ot")
+        if mode in ("cbd", "scbd"):
+            if const_targets:
+                cdf = self.store.spark.range(1).select(
+                    F.explode(
+                        F.array(*[T.term_id(T.lit_term(t)) for t in const_targets])
+                    ).alias("id")
+                )
+                ids = cdf if ids is None else ids.unionAll(cdf)
+            if ids is None:
+                return trips.select("st", "pt", "ot").limit(0)
+            ids = ids.where(F.col("id").isNotNull()).dropDuplicates()
+            return self._cbd(trips, ids, reverse=mode == "scbd")
+        # one step: a constant target reads only the bucket of the s-
+        # (and, symmetric, o-) keyed layout that holds it, instead of
+        # semi-joining the whole store against the target ids
+        cols = ("s", "p", "o", "g", "st", "pt", "ot")
+        parts = []
+        if ids is not None:
+            ids = ids.where(F.col("id").isNotNull()).dropDuplicates()
+            parts.append(trips.join(ids.withColumnRenamed("id", "s"), "s", "left_semi"))
+            if mode == "symmetric":
+                parts.append(trips.join(ids.withColumnRenamed("id", "o"), "o", "left_semi"))
+        for t in dict.fromkeys(const_targets):
+            tid = T.term_id(T.lit_term(t))
+            parts.append(self.store._probe_df(t, None).where(F.col("s") == tid))
+            if mode == "symmetric":
+                parts.append(self.store._probe_df(None, None, t).where(F.col("o") == tid))
+        if not parts:
+            return trips.select("st", "pt", "ot").limit(0)
+        out = parts[0].select(*cols)
+        for part in parts[1:]:
+            out = out.unionByName(part.select(*cols))
+        return out.dropDuplicates(["s", "p", "o", "g"]).select("st", "pt", "ot")
 
     def _cbd(
         self,
@@ -715,6 +776,111 @@ class SparqlEngine:
             return self.describe(text)
         raise TypeError(f"unsupported query {type(q)}")
 
+    # -------------------------------------------------------- point reads
+    def point_read_plan(self, q) -> PointRead | None:
+        """Whether the layout probe (``TripleStore.probe_rows``) answers
+        the parsed query ``q`` exactly as the Spark path would — the
+        reference answers a pattern with a bound key as a prefix scan
+        of one index permutation (``SPOKeyOrder``).  Eligible: a loaded,
+        unmutated triples store (``TripleStore.probe_ready``), no
+        backchaining, no FROM/FROM NAMED, no hints, and
+
+        * SELECT (plain projection, optional LIMIT) or ASK whose WHERE
+          is one triple pattern of plain variables and constants — no
+          path, no repeated variable, no blank-node constant, no magic
+          service predicate — with a constant subject, or a constant
+          object and a variable subject;
+        * DESCRIBE of constant IRIs with no WHERE (a ``describeMode``
+          hint may leave an empty one), in symmetric or forward mode.
+
+        Returns None for every other query (the Spark path)."""
+        store = self.store
+        if self.backchain or not store.probe_ready or getattr(q, "dataset", None):
+            return None
+        hints = dict(getattr(q, "hints", None) or {})
+        if isinstance(q, A.DescribeQuery):
+            mode = self._DESCRIBE_MODES.get(hints.pop("describeMode", "").lower(), "symmetric")
+            if (
+                hints
+                or (q.where is not None and q.where.elements)
+                or mode not in ("symmetric", "forward")
+                or not q.targets
+                or not all(
+                    isinstance(t, A.Const) and t.term.kind == T.KIND_IRI for t in q.targets
+                )
+            ):
+                return None
+            patterns = []
+            for t in dict.fromkeys(t.term for t in q.targets):
+                patterns.append((t, None, None))
+                if mode == "symmetric":
+                    patterns.append((None, None, t))
+            return PointRead(store, "describe", patterns)
+        if hints or not isinstance(q, (A.SelectQuery, A.AskQuery)):
+            return None
+        if isinstance(q, A.SelectQuery) and (
+            q.distinct or q.reduced or q.group_by or q.having or q.order_by
+            or q.offset or q.values is not None or q.named_subqueries
+            or any(e is not None for _v, e in q.projections)
+        ):
+            return None
+        els = q.where.elements
+        if len(els) != 1 or not isinstance(els[0], A.TriplePattern):
+            return None
+        nodes = (els[0].s, els[0].p, els[0].o)
+        if not all(isinstance(n, (A.Var, A.Const)) for n in nodes):
+            return None
+        names = [n.name for n in nodes if isinstance(n, A.Var)]
+        consts = [n.term for n in nodes if isinstance(n, A.Const)]
+        s, p, o = (n.term if isinstance(n, A.Const) else None for n in nodes)
+        if (
+            len(set(names)) != len(names)
+            or any(t.kind == T.KIND_BNODE for t in consts)
+            or (p is not None and p.lex.startswith(Compiler.MAGIC_SERVICE_NS))
+            or (s is None and o is None)
+        ):
+            return None
+        if isinstance(q, A.AskQuery):
+            return PointRead(store, "ask", [(s, p, o)])
+        binds = {n.name: col for n, col in zip(nodes, ("st", "pt", "ot")) if isinstance(n, A.Var)}
+        head = [v.name for v, _e in q.projections] or sorted(
+            v for v in binds if not v.startswith("__")
+        )
+        return PointRead(store, "select", [(s, p, o)], head, binds, q.limit)
+
+    def point_read(self, q):
+        """Answer the parsed query ``q`` with the layout probe: a
+        :class:`SelectResult` carrying ``rows`` (SELECT), a bool (ASK),
+        or the described statements as (st, pt, ot) term dicts
+        (DESCRIBE).  None when the probe cannot answer it — the caller
+        takes the Spark path."""
+        plan = self.point_read_plan(q)
+        if plan is None:
+            return None
+        if plan.form == "describe":
+            seen: dict = {}
+            for s, p, o in plan.patterns:
+                for r in plan.store.probe_rows(s, p, o):
+                    seen.setdefault((r["s"], r["p"], r["o"]), (r["st"], r["pt"], r["ot"]))
+            return list(seen.values())
+        s, p, o = plan.patterns[0]
+        if plan.form == "ask":
+            return bool(plan.store.probe_rows(s, p, o, columns=("s",)))
+        cols = sorted(set(plan.binds.values())) or ["s"]
+        rows = [
+            {v: r[plan.binds[v]] if v in plan.binds else None for v in plan.vars}
+            for r in plan.store.probe_rows(s, p, o, columns=cols)
+        ]
+        if plan.limit is not None and len(rows) > plan.limit:
+            # LIMIT without ORDER BY: the Spark path keeps the first
+            # rows in term order (compile_select) — same choice here
+            keys = [tuple(_order_key(r[v]) for v in plan.vars) for r in rows]
+            if any(None in k for k in keys):
+                return None
+            order = sorted(range(len(rows)), key=keys.__getitem__)[: plan.limit]
+            rows = [rows[i] for i in order]
+        return SelectResult(None, plan.vars, rows)
+
     # ------------------------------------------------------------ update
     def update(self, text: str) -> None:
         """Execute SPARQL UPDATE ops in order, replacing self.store
@@ -789,8 +955,13 @@ class SparqlEngine:
             mutates = isinstance(
                 op, (A.InsertData, A.DeleteData, A.Modify, A.LoadUpdate, A.ClearUpdate, A.DropUpdate, A.CopyMoveAdd)
             )
+            # CREATE/DROP/ENABLE ENTAILMENTS replace the store too (they
+            # are not user mutations truth maintenance would re-close)
+            changes_store = mutates or (
+                isinstance(op, A.EntailmentsUpdate) and op.op != "DISABLE"
+            )
             self._update_one(op)
-            if mutates:
+            if changes_store:
                 # the memoized sub-class/sub-property closure may now be
                 # stale (e.g. an inserted rdfs:subClassOf edge)
                 self._backchain_maps = None

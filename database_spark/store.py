@@ -68,6 +68,24 @@ def _with_ids(df: DataFrame) -> DataFrame:
     return df.select("s", "p", "o", "g", "st", "pt", "ot", "gt", "inferred")
 
 
+def _local_dir(path: str) -> str | None:
+    """Absolute local directory of a store path (a bare path or a
+    ``file:`` URI); None for any other filesystem."""
+    import os
+
+    if path.startswith("file:///"):
+        path = path[len("file://"):]
+    elif path.startswith("file:/") and not path.startswith("file://"):
+        path = path[len("file:"):]
+    elif ":" in path.split("/", 1)[0]:
+        return None  # a scheme: hdfs://, s3a://, file://host/...
+    return os.path.abspath(path)
+
+
+#: columns the layout probe reads from a bucket file
+PROBE_COLUMNS = ("s", "p", "o", "st", "pt", "ot")
+
+
 @dataclass
 class TripleStore:
     spark: SparkSession
@@ -108,6 +126,13 @@ class TripleStore:
     #: never pays a discovery scan (r2 verdict: the blind limit-1 probe
     #: was a full-table pass on triples-only stores).
     has_named: bool | None = None
+    #: local directory this store was loaded from, set only by ``load``:
+    #: every mutation, compaction or view builds a new store without it,
+    #: so a store with a root is exactly the saved files and the
+    #: pyarrow layout probe (``probe_rows``) may read them directly
+    root: str | None = None
+    #: bucket directory -> pyarrow dataset, filled by ``probe_rows``
+    _probe_datasets: dict = field(default_factory=dict, repr=False, compare=False)
     #: store-generation token: fresh per construction, merged into the
     #: compiler's probe-cache keys so overwriting a store path and
     #: reloading it never serves stale memoized probes (semanticHash of
@@ -443,6 +468,7 @@ class TripleStore:
             o_buckets=o_buckets,
             g_df=g_df,
             g_buckets=g_buckets,
+            root=_local_dir(path),
         )
 
     # ------------------------------------------------------------- views
@@ -527,6 +553,61 @@ class TripleStore:
             )
         return df
 
+    @property
+    def probe_ready(self) -> bool:
+        """Whether :meth:`probe_rows` may read the saved files: a store
+        returned by ``load`` from a local path (never mutated — see
+        ``root``), triples-only, with both key layouts."""
+        return (
+            self.root is not None
+            and self.has_named is False
+            and self.s_df is not None
+            and self.o_df is not None
+        )
+
+    def probe_bucket(self, s, o) -> str:
+        """The bucket directory :meth:`probe_rows` reads: the
+        subject-keyed layout's for a bound ``s``, else the object-keyed
+        layout's for ``o``."""
+        import os
+
+        pos, key, n = ("s", s, self.s_buckets) if s is not None else ("o", o, self.o_buckets)
+        return os.path.join(
+            self.root, f"_{pos}_index", f"{pos}_bucket={T.term_id_of(key) % n}"
+        )
+
+    def probe_rows(
+        self, s=None, p=None, o=None, g=None, columns=PROBE_COLUMNS
+    ) -> list | None:
+        """Python twin of :meth:`_probe_df` for constant-keyed
+        patterns: read with pyarrow the one bucket directory that can
+        hold the matches — the subject-keyed layout when ``s`` is
+        bound, else the object-keyed one — filtered on the 64-bit term
+        ids and the context (``g IS NULL`` when ``g`` is unbound).  No
+        Spark job, no JVM call.  Returns the matching rows as dicts of
+        ``columns`` (term structs as dicts), or None when the store or
+        the pattern is not eligible and the caller must use Spark."""
+        if not self.probe_ready or (s is None and o is None):
+            return None
+        import os
+
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        bucket = self.probe_bucket(s, o)
+        dataset = self._probe_datasets.get(bucket)
+        if dataset is None:
+            if not os.path.isdir(bucket):
+                return []  # no statement hashed to this bucket
+            # the saved files never change under a store with a root,
+            # so the directory listing and footers are read once
+            dataset = self._probe_datasets[bucket] = ds.dataset(bucket, format="parquet")
+        cond = pc.field("g").is_null() if g is None else pc.field("g") == T.term_id_of(g)
+        for pos, t in (("s", s), ("p", p), ("o", o)):
+            if t is not None:
+                cond = cond & (pc.field(pos) == T.term_id_of(t))
+        return dataset.to_table(columns=list(columns), filter=cond).to_pylist()
+
     def count_pattern(self, s=None, p=None, o=None, g=None) -> int:
         """Cardinality of a triple pattern (FastRangeCountOp analog —
         parquet row-group stats + pushdown make this a metadata-mostly
@@ -538,8 +619,12 @@ class TripleStore:
         return df.count()
 
     def has_statement(self, s=None, p=None, o=None, g=None) -> bool:
-        """Limit-1 existence probe (HASSTMT servlet): the scan stops at
-        the first matching row-group hit, no full count."""
+        """Existence probe (HASSTMT servlet): answered by the layout
+        probe when it is eligible, else a limit-1 Spark scan that stops
+        at the first matching row-group hit, no full count."""
+        rows = self.probe_rows(s, p, o, g, columns=("s",))
+        if rows is not None:
+            return bool(rows)
         df = self._probe_df(s, p, o, g)
         for pos, val in (("s", s), ("p", p), ("o", o), ("g", g)):
             if val is not None:

@@ -26,6 +26,8 @@ typed ``xsd:string``; language-tagged literals have datatype
 
 from __future__ import annotations
 
+import functools
+import struct
 from dataclasses import dataclass
 
 from pyspark.sql import Column
@@ -266,6 +268,78 @@ def _term_id_raw(term: Column) -> Column:
         F.coalesce(term.getField("dt"), F.lit("")),
         F.coalesce(term.getField("lang"), F.lit("")),
     )
+
+
+# Python twin of ``term_id``: Spark's ``xxhash64`` is XXH64 with
+# seed 42, chained field by field (each field hashed with the running
+# hash as its seed); a byte field hashes as its 4-byte little-endian
+# int, a string as its UTF-8 bytes.
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+_M64 = 0xFFFFFFFFFFFFFFFF
+_XXHASH64_SEED = 42
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return (_rotl((acc + lane * _P2) & _M64, 31) * _P1) & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` (unsigned 64-bit seed and result)."""
+    n = len(data)
+    i = 0
+    if n >= 32:
+        v1 = (seed + _P1 + _P2) & _M64
+        v2 = (seed + _P2) & _M64
+        v3 = seed
+        v4 = (seed - _P1) & _M64
+        while i <= n - 32:
+            a, b, c, d = struct.unpack_from("<4Q", data, i)
+            v1 = _xxh_round(v1, a)
+            v2 = _xxh_round(v2, b)
+            v3 = _xxh_round(v3, c)
+            v4 = _xxh_round(v4, d)
+            i += 32
+        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M64
+        for v in (v1, v2, v3, v4):
+            h = ((h ^ _xxh_round(0, v)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i <= n - 8:
+        (k,) = struct.unpack_from("<Q", data, i)
+        h = (_rotl(h ^ _xxh_round(0, k), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i <= n - 4:
+        (k,) = struct.unpack_from("<I", data, i)
+        h = (_rotl(h ^ ((k * _P1) & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    while i < n:
+        h = (_rotl(h ^ ((data[i] * _P5) & _M64), 11) * _P1) & _M64
+        i += 1
+    h ^= h >> 33
+    h = (h * _P2) & _M64
+    h ^= h >> 29
+    h = (h * _P3) & _M64
+    return h ^ (h >> 32)
+
+
+@functools.lru_cache(maxsize=4096)
+def term_id_of(t: Term) -> int:
+    """The 64-bit id ``term_id`` computes for the constant ``t``,
+    worked out in Python (no Spark expression, no JVM call) — the
+    key the layout probe filters saved statements on."""
+    h = _xxh64(struct.pack("<i", t.kind), _XXHASH64_SEED)
+    for s in (t.lex, t.dt or "", t.lang or ""):
+        h = _xxh64(s.encode("utf-8"), h)
+    return h - (1 << 64) if h >> 63 else h
 
 
 def n3_col(term: Column) -> Column:

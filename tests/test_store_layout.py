@@ -747,6 +747,28 @@ def test_probe_bound_p_prunes_p_bucket(saved_store):
     assert not saved_store.has_statement(p=Term.iri(EX + "nope"))
 
 
+def test_describe_constant_target_prunes_s_and_o_buckets(spark, saved_store):
+    """The Spark-path DESCRIBE of a constant reads one s_bucket (its
+    statements as subject) and one o_bucket (as object) instead of
+    semi-joining the whole store against the target ids."""
+    q = f"DESCRIBE <{EX}s5> <{EX}p3>"
+    eng = SparqlEngine(saved_store)
+    df = eng._describe_uncached(q, "symmetric")
+    plan = _formatted_plan(df)
+    pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
+    assert any("s_bucket" in l for l in pf) and any("o_bucket" in l for l in pf), plan
+    assert "LeftSemi" not in plan
+    mem = SparqlEngine(TripleStore(spark, saved_store._flat(), has_named=False))
+
+    def rows(d):
+        return sorted((r["st"]["lex"], r["pt"]["lex"], r["ot"]["lex"]) for r in d.collect())
+
+    assert rows(df) == rows(mem.describe(q)) == [(EX + "s5", EX + "p5", "5")]
+    fwd = eng._describe_uncached(q, "forward")
+    assert "o_bucket" not in _formatted_plan(fwd)
+    assert rows(fwd) == rows(mem.describe(q, mode="forward"))
+
+
 def test_both_bound_scan_routes_by_partition_size(spark, tmp_path):
     """GRAPH <g> { ?s <p> ?o } — predicate AND context bound — routes
     through whichever pruned partition is smaller (tools/probe_pg.py at

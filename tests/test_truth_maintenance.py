@@ -199,3 +199,23 @@ def test_retraction_never_removes_explicit_statements(spark, monkeypatch):
     assert _is_animal(eng, "rex") is True
     assert eng.ask(f"PREFIX ex: <{EX}> ASK {{ ex:rex a ex:LifeForm }}")
     assert not eng.ask(f"PREFIX ex: <{EX}> ASK {{ ex:rex a ex:Dog }}")
+
+
+def test_entailment_verbs_invalidate_describe_cache(spark):
+    """CREATE/DROP/ENABLE ENTAILMENTS replace the store, so a repeated
+    DESCRIBE must not serve the description cached before them."""
+    trips = [
+        (Term.iri(EX + "a"), Term.iri(RDF + "type"), Term.iri(EX + "C"), None),
+        (Term.iri(EX + "C"), Term.iri(RDFS + "subClassOf"), Term.iri(EX + "D"), None),
+    ]
+    q = f"DESCRIBE <{EX}a>"
+
+    def fresh(eng):
+        return SparqlEngine(eng.store).describe(q).count()
+
+    eng = SparqlEngine(TripleStore.from_python_triples(spark, trips))
+    assert eng.describe(q).count() == 1
+    for verb in ("CREATE", "DROP", "ENABLE"):
+        eng.update(f"{verb} ENTAILMENTS")
+        assert eng.describe(q).count() == fresh(eng), verb
+    assert fresh(eng) == 2  # ex:a a ex:C, ex:D once entailments are on
